@@ -963,7 +963,7 @@ def _oracle_tms_custom(n: int) -> str:
 def _q_contour_polygons(spark, sf_dir):
     """gdal_contour -p banded polygons: connected components of the
     iso-band raster via the distributed polygonize (per-tile
-    union-find + cross-tile pointer-jump merge); SQL oracle labels
+    union-find + one-job cross-tile union-find stitch); SQL oracle labels
     the whole raster with unrolled materialized pointer-jump rounds."""
     return polyop.polygonize_grid(spark, "demband:64:128:192", 96, 96)
 

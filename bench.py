@@ -1,9 +1,9 @@
 """Benchmark harness.
 
 Default mode: run the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE JSON
-line: {"metric", "value" (total seconds), "unit": "sec",
-"queries": {name: sec}, "sf", plus throughput extras}.
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the host's
+nproc) and print ONE JSON line: {"metric", "value" (total seconds),
+"unit": "sec", "queries": {name: sec}, "sf", plus throughput extras}.
 
 Scaling mode (--scaling): run the same job at two parallelism levels
 (default local[8] vs local[32] — the sandbox proxy for N vs 4N
@@ -454,7 +454,9 @@ def platform_ceiling(lo: int, hi: int, kind: str = "mem") -> float:
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
 
     if "--scaling-worker" in sys.argv:
         print(json.dumps(run_scaling_job(cores)))

@@ -61,7 +61,8 @@ def label_components(nodes, pairs, max_merge_rounds: int = 30):
     node of the component (the keeper convention shared with the SQL
     chain above). Neighbor-min propagation + pointer double-jump;
     O(log n) rounds, each a full distributed job; label tables keep
-    the input's partitioning (fixpoint_parts)."""
+    the input's partitioning (fixpoint_parts). Raises RuntimeError if
+    the last of ``max_merge_rounds`` rounds still changed a label."""
     from pyspark.sql import functions as F
 
     nparts = fixpoint_parts(nodes)
@@ -104,6 +105,11 @@ def label_components(nodes, pairs, max_merge_rounds: int = 30):
         roots = new_roots
         if changed == 0:
             break
+    else:
+        raise RuntimeError(
+            f"label_components: labels still changing after "
+            f"{max_merge_rounds} rounds"
+        )
     sizes = roots.groupBy("root").agg(F.count("*").alias("cluster_size"))
     return roots.join(sizes, "root").selectExpr(
         "node",
@@ -111,3 +117,53 @@ def label_components(nodes, pairs, max_merge_rounds: int = 30):
         "cluster_size",
         "cast(node = root as int) AS is_keeper",
     )
+
+
+def union_find(a, b) -> dict:
+    """Plain union-find over the edge lists ``a``, ``b``: {node: root}
+    for every node on an edge, root = min node id of its component."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in zip(a, b):
+        rx, ry = find(x), find(y)
+        if rx != ry:
+            parent[max(rx, ry)] = min(rx, ry)
+    return {x: find(x) for x in parent}
+
+
+def stitch_roots(pairs, keys=()):
+    """Cross-tile stitch of per-tile components in ONE job.
+
+    The tiled operators (contour_polylines, polygonize_grid) union-find
+    each tile locally; what is left is the graph of local component
+    roots, with an edge (a, b) wherever two tiles see the same boundary
+    node or pixel. That graph is bounded by tile perimeter x tile count
+    (x levels for contour), not by raster area, so a plain union-find
+    per ``keys`` group — one groupBy(keys).applyInPandas task, one
+    shuffle, no driver loop — labels it.
+
+    ``pairs`` has columns (*keys, a, b); returns (*keys, node, root)
+    for every node on an edge, root = min node id of its component."""
+    import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    keys = list(keys)
+
+    def label(key, pdf):
+        roots = union_find(pdf["a"].tolist(), pdf["b"].tolist())
+        return pd.DataFrame(
+            {**dict(zip(keys, key)), "node": list(roots),
+             "root": list(roots.values())}
+        )
+
+    schema = StructType(
+        [pairs.schema[k] for k in keys]
+        + [StructField("node", LongType()), StructField("root", LongType())]
+    )
+    return pairs.groupBy(*keys).applyInPandas(label, schema=schema)

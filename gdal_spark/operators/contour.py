@@ -21,6 +21,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from ..graphsql import stitch_roots, union_find
 from .dem import DEM_VALUE_SQL, _dem_value
 
 
@@ -246,7 +247,6 @@ def contour_polylines(
     height: int,
     levels: tuple[int, ...] = (64, 128, 192),
     tile_px: int = 32,
-    max_merge_rounds: int = 40,
 ) -> DataFrame:
     """Tiled marching squares -> cross-tile polyline stitch. Per
     level: segment count, node (crossed-edge) count, open endpoints
@@ -255,13 +255,12 @@ def contour_polylines(
     a cell is owned by the tile containing its top-left pixel, so the
     segment set is tiling-invariant.
 
-    Two-level stitch (the polygonize shape, but with per-tile
-    union-find done LOCALLY in numpy): each tile emits its segments
-    plus a (boundary node -> local component root) map; cross-tile
-    equivalences arise only where a boundary node is seen by two
-    tiles, so the distributed pointer-jump runs over the tiny
-    local-root graph and needs only ~log2(tiles a contour spans)
-    rounds — fixed count, no per-round driver actions."""
+    Two-level stitch: each tile union-finds its segments LOCALLY and
+    emits them plus a (boundary node -> local component root) map.
+    Cross-tile equivalences arise only where a boundary node is seen
+    by two tiles, so the global components are those of the small
+    local-root graph, labelled by graphsql.stitch_roots in one job
+    per query (one union-find task per level)."""
     ntx = (width - 1 + tile_px - 1) // tile_px
     nty = (height - 1 + tile_px - 1) // tile_px
     tiles = spark.range(ntx * nty).selectExpr(
@@ -278,26 +277,12 @@ def contour_polylines(
         rows = []
         for lv in levels:
             lo, hi, ln = marching_segments(vals, lv, cx0, cy0)
-            # local union-find -> local roots (min node id)
-            parent: dict = {}
-
-            def find(x):
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for a, b in zip(lo.tolist(), hi.tolist()):
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
             for a, b, l_ in zip(lo.tolist(), hi.tolist(), ln.tolist()):
                 rows.append((int(lv), "seg", a, b, l_))
             # every local component registers its root; every node on
             # the tile's cell-boundary maps node -> root for stitching
-            for node in parent:
-                r = find(node)
-                ex, ey, et = node // 2 // _EID_XSHIFT, (node // 2) % _EID_XSHIFT, node % 2
+            for node, r in union_find(lo.tolist(), hi.tolist()).items():
+                ex, ey = node // 2 // _EID_XSHIFT, (node // 2) % _EID_XSHIFT
                 boundary = (
                     ex <= cx0 or ex >= cx0 + cw
                     or ey <= cy0 or ey >= cy0 + ch
@@ -344,71 +329,23 @@ def contour_polylines(
         bnd.alias("x")
         .join(bnd.alias("y"), ["level", "node"])
         .selectExpr("level", "x.lroot AS a", "y.lroot AS b")
-        .where("a <> b")
-        .distinct()
+        .where("a < b")
     )
     # a boundary node can be the min-id local root in BOTH adjacent
-    # tiles -> 'comp' rows duplicate across tiles; the root table must
-    # be keyed uniquely per (level, node) or every pointer jump
-    # multiplies by the duplicate count (exponential blowup)
-    from ..graphsql import fixpoint_parts
-
-    nparts = fixpoint_parts(raw)
-    comps = raw.filter("kind = 'comp'").selectExpr("level", "a AS lroot").distinct()
-    roots = comps.selectExpr(
-        "level", "lroot AS node", "lroot AS root"
-    ).coalesce(nparts).localCheckpoint(eager=True)
-    sym = (
-        pairs.unionAll(pairs.selectExpr("level", "b AS a", "a AS b"))
-        .distinct()
-        .coalesce(nparts)
-        .localCheckpoint(eager=True)
+    # tiles, so 'comp' rows may repeat; counting distinct global roots
+    # absorbs that
+    roots = stitch_roots(pairs, ["level"]).selectExpr(
+        "level", "node AS lroot", "root"
     )
-    # the local-root equivalence graph's diameter scales with how
-    # often a contour re-crosses tile boundaries (NOT with the tile
-    # count), so rounds iterate to an explicit fixpoint; each round is
-    # a join over the tiny root table, so the check is cheap
-    for _ in range(max_merge_rounds):
-        nbr = (
-            sym.join(
-                roots.selectExpr("level", "node AS b", "root AS nroot"),
-                ["level", "b"],
-            )
-            .groupBy("level", "a")
-            .agg(F.min("nroot").alias("min_nbr"))
-        )
-        half = roots.join(
-            nbr.selectExpr("level", "a AS node", "min_nbr"),
-            ["level", "node"],
-            "left",
-        ).selectExpr(
-            "level", "node", "least(root, coalesce(min_nbr, root)) AS root"
-        ).coalesce(nparts).localCheckpoint(eager=True)
-        # pointer jump: checkpoint BEFORE the self-join and rename the
-        # jump side to fresh column names — a USING-list self-join on a
-        # shared lazy plan can resolve both sides to the same attribute
-        # and silently degrade to a per-level cross join
-        jump = half.selectExpr("level AS jl", "node AS jn", "root AS jr")
-        new_roots = (
-            half.join(
-                jump,
-                (F.col("level") == F.col("jl")) & (F.col("root") == F.col("jn")),
-                "left",
-            )
-            .selectExpr("level", "node", "coalesce(jr, root) AS root")
-        ).coalesce(nparts).localCheckpoint(eager=True)
-        changed = (
-            new_roots.selectExpr("level", "node", "root AS nr")
-            .join(roots, ["level", "node"])
-            .filter("nr <> root")
-            .count()
-        )
-        roots = new_roots
-        if changed == 0:
-            break
     comp_agg = (
-        roots.groupBy("level")
-        .agg(F.countDistinct("root").alias("n_components"))
+        raw.filter("kind = 'comp'")
+        .selectExpr("level", "a AS lroot")
+        .join(roots, ["level", "lroot"], "left")
+        .groupBy("level")
+        .agg(
+            F.countDistinct(F.expr("coalesce(root, lroot)"))
+            .alias("n_components")
+        )
     )
     return (
         seg_agg.join(node_agg, "level")
@@ -433,9 +370,10 @@ def oracle_contour_polylines(
 ) -> str:
     """Whole-raster SQL replay: the same case table emits (e_lo, e_hi,
     len_u) per cell; components via UNROLLED pointer-jumping rounds
-    (neighbor-min + double jump per round — the same fixpoint the
-    Spark stitcher reaches, O(log diameter) rounds; a recursive-CTE
-    reachability closure is exact too but O(sum comp^2) rows)."""
+    (neighbor-min + double jump per round, O(log diameter) rounds —
+    an engine independent of the Spark side's union-find; a
+    recursive-CTE reachability closure is exact too but O(sum comp^2)
+    rows)."""
     val = DEM_VALUE_SQL
     corners = {
         "va": val.replace("gx", "cx").replace("gy", "cy"),

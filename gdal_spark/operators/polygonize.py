@@ -11,8 +11,9 @@ runs single-process over the whole raster; the Spark shape is:
   2. tile boundary strips -> equivalence edges between labels of
      adjacent tiles where values match (the cross-tile analog of the
      enumerator's row-to-row label merging),
-  3. iterative min-label propagation over the edge list until
-     fixpoint (pointer-jumping: O(log diameter) rounds of joins),
+  3. one union-find over the graph of those labels (graphsql.stitch_roots:
+     a single groupBy/applyInPandas task — the graph is bounded by tile
+     perimeter x tile count, not raster area),
   4. final groupBy(root) -> component id (min global pixel index),
      value, pixel count.
 
@@ -26,6 +27,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from ..graphsql import stitch_roots
 
 
 def label_tile(vals: np.ndarray, connect8: bool = False) -> np.ndarray:
@@ -80,7 +83,6 @@ def polygonize_grid(
     height: int,
     tile_px: int = 32,
     connect8: bool = False,
-    max_rounds: int = 16,
     with_bbox: bool = False,
 ) -> DataFrame:
     """Polygonize a deterministic raster defined by ``value_sql`` (a
@@ -187,60 +189,26 @@ def polygonize_grid(
     edges = raw.filter("kind = 'edge'")
 
     # adjacency: right-edge pixel (gx, gy) matches left-edge pixel
-    # (gx+1, gy); bottom matches top (gy+1) — equal values merge
-    r = edges.filter("side = 'R'").selectExpr("gx", "gy", "val", "label AS la")
+    # (gx+1, gy); bottom matches top (gy+1) — equal values merge. With
+    # 8-connectivity each left/top pixel also touches the two diagonal
+    # pixels across the tile edge (tile corners included).
+    steps = "array(-1, 0, 1)" if connect8 else "array(0)"
+    r = edges.filter("side = 'R'").selectExpr("gx", "gy", "val", "label AS a")
     le = edges.filter("side = 'L'").selectExpr(
-        "gx - 1 AS gx", "gy", "val", "label AS lb"
+        "gx - 1 AS gx", f"explode(transform({steps}, d -> gy + d)) AS gy",
+        "val", "label AS b",
     )
-    b = edges.filter("side = 'B'").selectExpr("gx", "gy", "val", "label AS la")
+    bo = edges.filter("side = 'B'").selectExpr("gx", "gy", "val", "label AS a")
     t = edges.filter("side = 'T'").selectExpr(
-        "gx", "gy - 1 AS gy", "val", "label AS lb"
+        f"explode(transform({steps}, d -> gx + d)) AS gx", "gy - 1 AS gy",
+        "val", "label AS b",
     )
     pairs = (
         r.join(le, ["gx", "gy", "val"])
-        .select("la", "lb")
-        .union(b.join(t, ["gx", "gy", "val"]).select("la", "lb"))
-        .distinct()
+        .select("a", "b")
+        .unionAll(bo.join(t, ["gx", "gy", "val"]).select("a", "b"))
     )
-
-    # iterative min-root propagation (pointer jumping); lineage is
-    # truncated each round (localCheckpoint) so round k doesn't
-    # re-execute rounds 0..k-1
-    roots = comps.selectExpr("label", "label AS root").localCheckpoint(eager=True)
-    sym = (
-        pairs.union(pairs.selectExpr("lb AS la", "la AS lb"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        nbr = (
-            sym.join(roots.selectExpr("label AS lb", "root AS nroot"), "lb")
-            .groupBy("la")
-            .agg(F.min("nroot").alias("min_nbr"))
-        )
-        new_roots = (
-            roots.join(nbr.selectExpr("la AS label", "min_nbr"), "label", "left")
-            .selectExpr("label", "least(root, coalesce(min_nbr, root)) AS root")
-        )
-        # root-of-root contraction (pointer jumping halves depth)
-        new_roots = (
-            new_roots.alias("a")
-            .join(
-                new_roots.selectExpr("label AS root", "root AS rroot").alias("b"),
-                "root",
-                "left",
-            )
-            .selectExpr("label", "coalesce(rroot, root) AS root")
-        ).localCheckpoint(eager=True)
-        changed = (
-            new_roots.alias("n")
-            .join(roots.selectExpr("label", "root AS old").alias("o"), "label")
-            .filter("root <> old")
-            .count()
-        )
-        roots = new_roots
-        if changed == 0:
-            break
+    roots = stitch_roots(pairs).selectExpr("node AS label", "root")
 
     aggs = [F.min("val").alias("val"), F.sum("n").alias("n_pixels")]
     cols = ["root AS comp_id", "val", "n_pixels"]
@@ -250,7 +218,13 @@ def polygonize_grid(
             F.min("miny").alias("miny"), F.max("maxy").alias("maxy"),
         ]
         cols += ["minx", "maxx", "miny", "maxy"]
-    return comps.join(roots, "label").groupBy("root").agg(*aggs).selectExpr(*cols)
+    return (
+        comps.join(roots, "label", "left")
+        .withColumn("root", F.coalesce("root", "label"))
+        .groupBy("root")
+        .agg(*aggs)
+        .selectExpr(*cols)
+    )
 
 
 def _eval_value(value_sql: str, gx: np.ndarray, gy: np.ndarray) -> np.ndarray:

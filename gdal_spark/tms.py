@@ -55,7 +55,8 @@ class TileMatrix:
     def tile_of(self, x, y):
         """Vectorized (x, y) CRS coords -> (tx, ty), clipped; with
         variableMatrixWidth the column snaps to its row's coalesce
-        multiple (only every coalesce-th tile exists on that row)."""
+        multiple (only every coalesce-th tile exists on that row); the
+        first matching range wins, as in coalesce_for_row."""
         x = np.asarray(x, dtype=np.float64)
         y = np.asarray(y, dtype=np.float64)
         spanx = self.res * self.tile_width
@@ -64,10 +65,10 @@ class TileMatrix:
         ty = np.floor((self.top_left[1] - y) / spany).astype(np.int64)
         tx = np.clip(tx, 0, self.matrix_width - 1)
         ty = np.clip(ty, 0, self.matrix_height - 1)
-        for c, lo, hi in self.variable_matrix_widths:
-            m = (ty >= lo) & (ty <= hi)
-            tx = np.where(m, (tx // c) * c, tx)
-        return tx, ty
+        coalesce = np.ones_like(ty)
+        for c, lo, hi in reversed(self.variable_matrix_widths):
+            coalesce = np.where((ty >= lo) & (ty <= hi), c, coalesce)
+        return (tx // coalesce) * coalesce, ty
 
     def tile_sql(self, x_expr: str, y_expr: str, axis: str) -> str:
         """Dual-dialect SQL twin of tile_of (identical op sequence).

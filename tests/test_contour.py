@@ -100,7 +100,8 @@ def test_walk_extracts_exact_polylines():
 
 def test_tiled_pipeline_matches_untiled(spark):
     """The Spark tiled stitch == whole-raster union-find on every
-    emitted aggregate, for two different tile sizes."""
+    emitted aggregate, for three tile sizes; at 8 px the raster is 144
+    tiles, so contours cross many tile boundaries."""
     expect = {}
     for lv in LEVELS:
         lo, hi, ln = _whole_raster(lv)
@@ -112,7 +113,7 @@ def test_tiled_pipeline_matches_untiled(spark):
             len(comps),
             int(ln.sum()),
         )
-    for tile_px in (32, 48):
+    for tile_px in (8, 32, 48):
         out = (
             contour.contour_polylines(spark, W, W, LEVELS, tile_px=tile_px)
             .toPandas()

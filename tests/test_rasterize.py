@@ -171,3 +171,39 @@ def test_rasterize_inverse_closed_form(spark):
         want = 330 if 50 <= y < 70 else 360
         assert out.loc[y, "nnz"] == want
         assert out.loc[y, "sum_v"] == want * 7.0
+
+
+def test_polygonize_serpentine_across_many_tiles(spark):
+    """8-px tiles over the 64x64 DEM valid-data raster (the footprint
+    input): its winding component crosses at least 16 tiles, and the
+    one-job stitch labels every component like a whole-raster search."""
+    from gdal_spark.operators.dem import _dem_value
+
+    W, T = 64, 8
+    gy, gx = np.mgrid[0:W, 0:W]
+    vals = (_dem_value(gx, gy) >= 128).astype(np.int64)
+    ref = brute_cc(vals)
+    tiles = {
+        u: len(np.unique((gy[ref == u] // T) * W + gx[ref == u] // T))
+        for u in np.unique(ref)
+    }
+    assert max(tiles.values()) >= 16
+    out = polyop.polygonize_grid(spark, "demvalid:128", W, W, tile_px=T)
+    got = {(int(r.comp_id), int(r.val), int(r.n_pixels)) for r in out.collect()}
+    assert got == canon(ref, vals)
+
+
+def test_polygonize_8conn_stitches_diagonals_across_tiles(spark):
+    """Checkerboard: under 8-connectivity each colour is ONE component
+    that is joined only through diagonal neighbours, including across
+    tile edges and tile corners."""
+    W = 24
+    gy, gx = np.mgrid[0:W, 0:W]
+    vals = ((gx + gy) % 2).astype(np.int64)
+    out = polyop.polygonize_grid(
+        spark, "block:1:2", W, W, tile_px=5, connect8=True
+    )
+    got = {(int(r.comp_id), int(r.val), int(r.n_pixels)) for r in out.collect()}
+    assert got == canon(brute_cc(vals, connect8=True), vals) == {
+        (0, 0, W * W // 2), (1, 1, W * W // 2)
+    }

@@ -186,3 +186,27 @@ def test_vmw_validation_rejects_nondividing_coalesce():
     }
     with pytest.raises(tms.InvalidTileMatrixSet):
         tms.validate(tms.TileMatrixSet.from_json(doc))
+
+
+def test_vmw_tile_of_first_match_wins():
+    """Overlapping variableMatrixWidth ranges: tile_of applies only the
+    first range holding the row, like coalesce_for_row (and the
+    reference's GetCoalesceFactorForRow), not every overlapping one."""
+    import numpy as np
+
+    m = tms.TileMatrix(
+        "overlap", 1e6, (0.0, 0.0), 1, 1, 12, 8,
+        variable_matrix_widths=((2, 0, 4), (3, 3, 6), (4, 6, 7)),
+    )
+    span = m.res * m.tile_width
+    cols, rows = np.meshgrid(np.arange(12), np.arange(8), indexing="ij")
+    tx, ty = m.tile_of((cols.ravel() + 0.5) * span, -(rows.ravel() + 0.5) * span)
+    assert np.array_equal(ty, rows.ravel())
+    want = [
+        (c // m.coalesce_for_row(r)) * m.coalesce_for_row(r)
+        for c, r in zip(cols.ravel(), rows.ravel())
+    ]
+    assert np.array_equal(tx, want)
+    # row 3 sits in the first two ranges: column 9 snaps to 8 (coalesce
+    # 2), not to 8 and then 6 (coalesce 2, then 3)
+    assert m.coalesce_for_row(3) == 2 and tx[9 * 8 + 3] == 8

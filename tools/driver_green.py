@@ -3,7 +3,8 @@ CORRECTNESS_r*.json files (the r4 verdict's task 8: machine-generated,
 no hand-maintained counts).
 
 Writes COVERAGE_DRIVER.md: one row per registered query with the last
-round it was driver-green (rows+schema+hash), or `local-gate` if it
+round it was driver-green (rows+schema+hash; a record without
+``hash_match`` is not hash-verified, so not green), or `local-gate` if it
 has only ever been verified by tools/check_oracle.py.
 
 Usage: python tools/driver_green.py
@@ -43,7 +44,7 @@ def main() -> int:
             if (
                 rec.get("rows_match")
                 and rec.get("schema_match")
-                and rec.get("hash_match", True)
+                and rec.get("hash_match")
             ):
                 green[q] = max(green.get(q, 0), rnd)
     queries = load_registry()
